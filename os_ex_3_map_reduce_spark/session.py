@@ -107,6 +107,25 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def driver_memory(host_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a host with ``host_bytes`` of RAM.
+
+    ``$SPARK_GRAFT_DRIVER_MEM`` wins when set. Otherwise half the host's
+    physical memory (``host_bytes``, default read via ``os.sysconf``),
+    capped at 24g. The JVM's resident size runs well past ``-Xmx``
+    (metaspace, code cache, direct buffers) and the Python workers live
+    beside it, so a heap near or above the host's RAM gets the driver
+    OOM-killed mid-session.
+    """
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    if host_bytes is None:
+        host_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mb = min(host_bytes // 2 // 2**20, 24 * 1024)
+    return f"{mb // 1024}g" if mb % 1024 == 0 else f"{mb}m"
+
+
 def get_spark(
     app_name: str = "os_ex_3_map_reduce_spark",
     master: str | None = None,
@@ -117,6 +136,12 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32). On a real
     cluster, pass None and submit through spark-submit — every operator
     here is partitioning-agnostic.
+
+    The driver heap is sized to the host (``driver_memory``): half its
+    physical memory, capped at 24g, so 8g on a 16 GiB machine and 24g
+    from 48 GiB up. ``$SPARK_GRAFT_DRIVER_MEM`` (e.g. ``"12g"``)
+    overrides it. Like every static conf it only takes effect when this
+    call starts the JVM; a live session is reused as it is.
     """
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
@@ -128,7 +153,7 @@ def get_spark(
         .master(master)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         # Static conf (must be set before the JVM session exists, so it
         # lives here and not in RUNTIME_CONFS): cap plan-string
         # rendering. Rendering short-circuits once the cap is reached,
