@@ -55,11 +55,6 @@ def ascii_fold(col: str | Column) -> Column:
     return F.translate(c, ASCII_UPPER, ASCII_LOWER)
 
 
-def ascii_fold_sql(expr: str) -> str:
-    """The oracle-side twin of :func:`ascii_fold` (DuckDB SQL)."""
-    return f"translate({expr}, '{ASCII_UPPER}', '{ASCII_LOWER}')"
-
-
 def tokens(text_col: str | Column = "text") -> Column:
     """Shared tokenizer contract: split on a SINGLE LITERAL SPACE and
     drop empty tokens.

@@ -8,11 +8,24 @@ Reference parity (SURVEY.md §2.1 R1–R8):
   purely-syntactic shape change (SURVEY.md §3.2).
 - per-thread sort + single-threaded merge-shuffle
   [R:MapReduceFramework.cpp] → Spark's sort-based shuffle (parallel,
-  spilling, hash-partitioned) behind ``groupBy(key)``.
+  spilling, hash-partitioned): ``repartition(key)`` then
+  ``sortWithinPartitions(key)``, so every key is one contiguous sorted
+  run inside one partition — the reference's sorted pairs, minus its
+  single-thread merge bottleneck.
 - ``reduce(group, ctx)`` emitting 0..N pairs via ``emit3`` — full
-  UDTF-over-group power, NOT just scalar aggregation → ``applyInPandas``
-  (each distinct key's rows arrive as one pandas DataFrame; the rows
-  returned are the output).
+  UDTF-over-group power, NOT just scalar aggregation → one
+  ``mapInArrow`` call per partition walks the runs of equal keys
+  (:func:`sorted_group_scan`); the rows returned are the output.
+
+One grouped-reduce path. :func:`map_reduce` is :func:`sorted_group_scan`
+with a gather fold that collects a group's chunks and calls the user
+reduce once with the whole group. One partitioning rule serves both:
+``repartition(n, *keys)`` when a partition count is given, otherwise
+``repartition(*keys)``, which AQE may coalesce; then
+``sortWithinPartitions(*keys, *sort_cols)``. Pinning the count to the
+core count was measured and rejected (ROADMAP direction 1): it starts
+one Python worker per core, which raised CPU and peak memory per pass
+on small inputs.
 
 Two API levels:
 
@@ -24,13 +37,14 @@ Two API levels:
   over the same plan; per-row Python is the slow path by design.
 
 Scale notes (100 TB): the mapped relation is hash-partitioned on the
-key — same contract as the reference's shuffle, minus its single-thread
-merge bottleneck. One group must fit in one executor's memory
-(``applyInPandas`` materializes the group), which is exactly the
-reference's own constraint (a group = one in-RAM vector). For known-hot
-keys, pre-aggregate in ``map_fn`` (combiner) or salt the key before
-calling; AQE skew handling covers the join paths but not grouped-map,
-so the combiner pattern is the documented mitigation.
+key — same contract as the reference's shuffle. One group must fit in
+one executor's memory for :func:`map_reduce` (the gather fold
+materializes the group), which is exactly the reference's own
+constraint (a group = one in-RAM vector); an online
+:class:`SortedGroupFold` needs only its fold state. For known-hot keys,
+pre-aggregate in ``map_fn`` (combiner) or salt the key before calling;
+AQE skew handling covers the join paths but not grouped reduce, so the
+combiner pattern is the documented mitigation.
 """
 
 from __future__ import annotations
@@ -38,10 +52,15 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 
 def normalized_key(
@@ -87,7 +106,7 @@ def map_reduce(
     df: DataFrame,
     map_fn: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
     key_cols: list[str] | str,
-    reduce_fn: Callable[[tuple, pd.DataFrame], pd.DataFrame],
+    reduce_fn: Callable[[tuple, pd.DataFrame], pd.DataFrame | Iterable[tuple]],
     intermediate_schema: str,
     output_schema: str,
     num_shuffle_partitions: int | None = None,
@@ -98,12 +117,18 @@ def map_reduce(
     ``map_fn``: ``mapInPandas`` body — iterator of input batches →
     iterator of intermediate batches matching ``intermediate_schema``
     (0..N rows per input row: the emit2 surface).
-    ``reduce_fn``: called once per distinct key with all its rows;
-    returns a pandas DataFrame matching ``output_schema`` (0..N rows:
-    the emit3 surface).
+    ``reduce_fn``: called once per distinct key with all its rows (a
+    pandas DataFrame with a fresh ``RangeIndex``, converted from Arrow
+    for that group alone, as ``applyInPandas`` did: an integer column
+    is float64 only in a group that holds a null in it) and the key as
+    a tuple of Python values; returns an iterable of output tuples or
+    a pandas DataFrame (0..N rows: the emit3 surface). A DataFrame is
+    read as ``applyInPandas`` read it: by column name when any label
+    is a string, else by position; an empty ``pd.DataFrame()`` emits
+    nothing.
     ``num_shuffle_partitions``: reference's ``multiThreadLevel``
     analog — pins reduce-side parallelism; default leaves it to the
-    session/AQE.
+    session/AQE (see :func:`sorted_group_scan`).
     ``key_normalizer``: optional comparator-equivalence hook (see
     :func:`normalized_key`) applied to each key column for grouping.
     When set, ``reduce_fn``'s key argument carries the NORMALIZED
@@ -114,22 +139,15 @@ def map_reduce(
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     mapped = df.mapInPandas(map_fn, schema=intermediate_schema)
-    if key_normalizer is not None:
-        group_cols = [f"__nk_{c}" for c in key_cols]
+    drop = [f"__nk_{c}" for c in key_cols] if key_normalizer else []
+    if drop:
         mapped = mapped.select(
-            "*",
-            *[key_normalizer(F.col(c)).alias(n) for c, n in zip(key_cols, group_cols)],
+            "*", *[key_normalizer(F.col(c)).alias(n) for c, n in zip(key_cols, drop)]
         )
-        inner_reduce = reduce_fn
-
-        def reduce_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return inner_reduce(key, pdf.drop(columns=group_cols))
-
-    else:
-        group_cols = key_cols
-    if num_shuffle_partitions is not None:
-        mapped = mapped.repartition(num_shuffle_partitions, *group_cols)
-    return mapped.groupBy(*group_cols).applyInPandas(reduce_fn, schema=output_schema)
+    fold = _GatherFold(reduce_fn, drop, _ddl_field_names(output_schema))
+    return sorted_group_scan(
+        mapped, drop or key_cols, [], fold, output_schema, num_shuffle_partitions
+    )
 
 
 class MapReduceClient:
@@ -175,8 +193,6 @@ def _ddl_field_names(ddl: str) -> list[str]:
     wrong names (and therefore wrong shuffle keys) the moment a client
     schema nests a comma-bearing type like ``k struct<a:int,b:int>``.
     """
-    from pyspark.sql.types import _parse_datatype_string
-
     return list(_parse_datatype_string(ddl).fieldNames())
 
 
@@ -191,7 +207,6 @@ def run_map_reduce(
     minus the async control plane (see :mod:`.job` for that parity).
     """
     inter_cols = _ddl_field_names(client.intermediate_schema)
-    out_cols = _ddl_field_names(client.output_schema)
     key_cols = inter_cols[: client.n_key_cols]
 
     def map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -201,14 +216,11 @@ def run_map_reduce(
                 emitted.extend(client.map(row))
             yield pd.DataFrame(emitted, columns=inter_cols)
 
-    def reduce_group(key: tuple, group: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(list(client.reduce(key, group)), columns=out_cols)
-
     return map_reduce(
         df,
         map_batches,
         key_cols,
-        reduce_group,
+        client.reduce,
         client.intermediate_schema,
         client.output_schema,
         num_shuffle_partitions,
@@ -224,7 +236,7 @@ class SortedGroupFold:
     order) and returns the new state, ``finish(key, state)`` emits
     0..N output tuples. State is whatever the fold needs — O(1) for
     running aggregates — which is the entire point: unlike
-    ``applyInPandas``, the group is never materialized."""
+    :func:`map_reduce`'s gather fold, the group is never materialized."""
 
     def init(self, key: tuple) -> Any:  # pragma: no cover - interface
         raise NotImplementedError
@@ -236,6 +248,71 @@ class SortedGroupFold:
         raise NotImplementedError
 
 
+class _GatherFold(SortedGroupFold):
+    """The fold behind :func:`map_reduce`: collects a group's chunks,
+    then calls ``reduce_fn`` once with the whole group, minus the
+    ``drop`` columns (the normalized-key helpers). A DataFrame result
+    is read by the ``out_names`` column names when any of its labels
+    is a string, else by position."""
+
+    def __init__(self, reduce_fn: Callable, drop: list[str], out_names: list[str]):
+        self.reduce_fn, self.drop, self.out_names = reduce_fn, drop, out_names
+
+    def init(self, key: tuple) -> list[pd.DataFrame]:
+        return []
+
+    def step(self, state: list, chunk: pd.DataFrame) -> list[pd.DataFrame]:
+        return [*state, chunk]
+
+    def finish(self, key: tuple, state: list[pd.DataFrame]) -> Iterable[tuple]:
+        group = pd.concat(state) if state[1:] else state[0]
+        group = group.drop(columns=self.drop) if self.drop else group
+        out = self.reduce_fn(key, group.reset_index(drop=True))
+        if not isinstance(out, pd.DataFrame):
+            return out
+        if len(out.columns) == 0:
+            return []
+        if any(isinstance(c, str) for c in out.columns):
+            out = out[self.out_names]
+        return out.itertuples(index=False, name=None)
+
+
+def _key_changes(a: pa.Array, b: pa.Array) -> np.ndarray:
+    """Rows where key column ``a`` differs from ``b``, as ``groupBy``
+    tells keys apart: null equals null, NaN equals NaN, null differs
+    from NaN. Read from Arrow, where a null is not a NaN."""
+    same = pc.and_(a.is_null(), b.is_null())
+    if pa.types.is_floating(a.type):
+        same = pc.or_(same, pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+    try:
+        eq = pc.equal(a, b)
+    except pa.ArrowNotImplementedError:  # struct / list keys
+        eq = pa.array([x == y for x, y in zip(a.to_pylist(), b.to_pylist())])
+    return ~pc.or_(same, pc.fill_null(eq, False)).to_numpy(zero_copy_only=False)
+
+
+def _null_sets_dtype(a: pa.Array) -> bool:
+    """Whether a null in ``a`` changes its pandas dtype (an integer
+    column becomes float64, a boolean one object), or may do so in a
+    nested child."""
+    t = a.type
+    return pa.types.is_nested(t) or (
+        a.null_count > 0 and (pa.types.is_integer(t) or pa.types.is_boolean(t))
+    )
+
+
+def _rows_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    """Output tuples as one Arrow batch of ``schema``. Each column is
+    built from its Python values and then cast, so integers stay exact
+    (no shared float64 guess across groups); NaN becomes null, as in
+    any pandas result."""
+    cols = pd.DataFrame(rows, columns=schema.names, dtype=object)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name].to_numpy(), from_pandas=True).cast(f.type) for f in schema],
+        schema=schema,
+    )
+
+
 def sorted_group_scan(
     df: DataFrame,
     key_cols: list[str],
@@ -244,58 +321,65 @@ def sorted_group_scan(
     output_schema: str,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Secondary sort — the classic MapReduce composite-key pattern
-    (partition by the natural key, sort the shuffle by (key, value
-    fields), stream each group through reduce in value order), the one
-    grouped-reduce shape :func:`run_map_reduce` cannot express because
-    ``applyInPandas`` materializes whole groups in arbitrary row
-    order.
+    """Sorted-run scan: the engine's one grouped-reduce mechanism, and
+    with ``sort_cols`` the classic MapReduce secondary sort (partition
+    by the natural key, sort the shuffle by (key, value fields), stream
+    each group through reduce in value order).
 
-    Spark-first realization: ``repartition(key)`` co-locates each key,
-    ``sortWithinPartitions(key, sort)`` makes every group a contiguous
-    SORTED run inside its partition — the ordering work rides the
-    shuffle's own sort machinery, costing zero extra passes — and one
-    ``mapInPandas`` walks the partition detecting group boundaries,
-    folding each group's chunks online. A group larger than one Arrow
-    batch arrives as several ``step`` calls (boundary-spanning groups
-    are the hard part of the pattern and are property-tested with
-    tiny batch sizes); memory is O(fold state), never O(group) — at
-    100 TB this is what makes billion-row keys reducible where
-    ``applyInPandas`` would OOM.
+    Partitioning rule: ``repartition(num_partitions, *key_cols)`` when
+    ``num_partitions`` is given, else ``repartition(*key_cols)`` (the
+    session's shuffle partitions, which AQE may coalesce). Then
+    ``sortWithinPartitions(*key_cols, *sort_cols)`` makes every group a
+    contiguous SORTED run inside its partition — the ordering work
+    rides the shuffle's own sort machinery, costing zero extra passes —
+    and one ``mapInArrow`` walks the partition, finding run boundaries
+    on the Arrow key columns (as in ``groupBy``, null keys form one
+    group, NaN keys another), folding each group's chunks online and
+    flushing output once per input batch. Each chunk reaches ``step``
+    as a pandas DataFrame whose dtypes depend on that chunk's rows
+    alone (pyarrow's ``to_pandas``: timestamps arrive tz-aware in
+    UTC), the key as a tuple of Python values; output tuples are built
+    into Arrow column by column, so integers stay exact. A group larger than one Arrow batch arrives as several
+    ``step`` calls (boundary-spanning groups are the hard part of the
+    pattern and are property-tested with tiny batch sizes); memory is
+    O(fold state), never O(group) — at 100 TB this is what makes
+    billion-row keys reducible where a materialized group would OOM.
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    arranged = df.repartition(n, *key_cols).sortWithinPartitions(
-        *key_cols, *sort_cols
-    )
-    out_names = _ddl_field_names(output_schema)
+    parts = [num_partitions] if num_partitions else []
+    df = df.repartition(*parts, *key_cols).sortWithinPartitions(*key_cols, *sort_cols)
+    schema = to_arrow_schema(_parse_datatype_string(output_schema))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cur_key: tuple | None = None
         state: Any = None
-        pending: list[tuple] = []
-        for pdf in batches:
-            if not len(pdf):
+        last: pa.RecordBatch | None = None  # the previous batch's last row
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            keys = list(zip(*[pdf[k] for k in key_cols]))
-            bounds = [0]
-            bounds += [i for i in range(1, len(keys)) if keys[i] != keys[i - 1]]
-            bounds.append(len(keys))
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                k = keys[s]
-                chunk = pdf.iloc[s:e]
-                if cur_key is not None and k != cur_key:
-                    pending.extend(fold.finish(cur_key, state))
-                    cur_key = None
-                if cur_key is None:
+            starts = np.zeros(n, dtype=bool)
+            for c in key_cols:
+                col = batch.column(c)
+                prev = (last if last is not None else batch).column(c)[:1]
+                starts |= _key_changes(col, pa.concat_arrays([prev, col[:-1]]))
+            new_first = last is None or starts[0]  # else row 0 goes on cur_key's group
+            starts[0], last = True, batch.slice(n - 1)
+            bounds = np.flatnonzero(starts)
+            heads = zip(*(batch.column(c).take(bounds).to_pylist() for c in key_cols))
+            # one pandas frame per batch, sliced per chunk, unless a null
+            # would change a column's dtype for every group in the batch
+            whole = None if any(map(_null_sets_dtype, batch.columns)) else batch.to_pandas()
+            pending: list[tuple] = []
+            for s, e, k in zip(bounds, [*bounds[1:], n], heads):
+                if s or new_first:
+                    if cur_key is not None:
+                        pending.extend(fold.finish(cur_key, state))
                     cur_key, state = k, fold.init(k)
+                chunk = whole.iloc[s:e] if whole is not None else batch.slice(s, e - s).to_pandas()
                 state = fold.step(state, chunk)
             if pending:
-                yield pd.DataFrame(pending, columns=out_names)
-                pending = []
+                yield _rows_batch(pending, schema)
         if cur_key is not None:
-            pending.extend(fold.finish(cur_key, state))
-        if pending:
-            yield pd.DataFrame(pending, columns=out_names)
+            yield _rows_batch(list(fold.finish(cur_key, state)), schema)
 
-    return arranged.mapInPandas(run, output_schema)
+    return df.mapInArrow(run, output_schema)

@@ -21,11 +21,6 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return qe.explainString(jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode))
 
 
-def executed_plan_str(df: DataFrame) -> str:
-    """Final physical plan string (post-AQE if already executed)."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters section(s) of the formatted plan — empty string
     if nothing was pushed to the scan."""

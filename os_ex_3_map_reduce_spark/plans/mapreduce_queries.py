@@ -163,7 +163,7 @@ def q_mapreduce_key_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem GROUP BY l_returnflag
     """,
     doc="Literal UDAF surface: a grouped-agg pandas UDF (numpy kernel "
-    "per group) alongside the grouped-map applyInPandas path. Quantities "
+    "per group) alongside map_reduce's sorted-run reduce. Quantities "
     "are small exact integers in double, so the sum is order-independent "
     "and the oracle exact.",
 )
@@ -297,12 +297,13 @@ class OrderGapFold:
     """,
     doc="The classic MapReduce SECONDARY SORT pattern (composite key: "
     "partition by the natural key, sort the shuffle itself by (key, "
-    "value), stream each group through reduce in value order) — the "
-    "grouped-reduce shape applyInPandas cannot express because it "
-    "materializes whole unsorted groups. operators/map_reduce.py "
-    "sorted_group_scan: repartition(custkey) + sortWithinPartitions("
+    "value), stream each group through reduce in value order) through "
+    "operators/map_reduce.py sorted_group_scan, the engine's one "
+    "grouped-reduce path (run_map_reduce is the same scan with a fold "
+    "that gathers each group for the client reduce; here the fold "
+    "is online): repartition(custkey) + sortWithinPartitions("
     "custkey, date, orderkey) rides the shuffle's own sort (zero "
-    "extra passes), one mapInPandas walks each partition folding "
+    "extra passes), one mapInArrow walks each partition folding "
     "groups ONLINE — O(1) state per customer (n/first/prev/max-gap), "
     "groups spanning Arrow-batch boundaries handled by construction "
     "and property-tested at tiny batch sizes. Per-customer order "

@@ -49,18 +49,9 @@ def dsum(col: str | Column, alias: str) -> Column:
     return F.sum(dec(col)).cast("double").alias(alias)
 
 
-def davg(col: str | Column, alias: str) -> Column:
-    """Deterministic average: exact decimal sum, then one IEEE divide."""
-    return (F.sum(dec(col)).cast("double") / F.count("*")).alias(alias)
-
-
 # SQL-side twins (DuckDB)
 def SQL_DSUM(c: str) -> str:
     return f"CAST(SUM(CAST({c} AS DECIMAL(18,4))) AS DOUBLE)"
-
-
-def SQL_DAVG(c: str) -> str:
-    return f"(CAST(SUM(CAST({c} AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*))"
 
 
 # Exact decimal revenue term: extendedprice * (1 - discount).

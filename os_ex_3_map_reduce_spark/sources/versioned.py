@@ -382,14 +382,7 @@ def vt_count_branch(
     (r16; the branch twin of :func:`vt_count` — same delete-free
     footer fast path, same MoR scan fallback, same
     ``SPARK_GRAFT_NO_META_COUNT`` kill switch)."""
-    bv = vt_branch_current(path, name) if bversion is None else bversion
-    if bv is None or not os.path.exists(
-        _branch_manifest_file(path, name, bv)
-    ):
-        raise FileNotFoundError(f"no branch {name} v{bversion} at {path}")
-    with open(_branch_manifest_file(path, name, bv)) as fh:
-        man = json.load(fh)
-    return _manifest_count(spark, path, man)
+    return _manifest_count(spark, path, _branch_manifest(path, name, bversion))
 
 
 def vt_has_tag(path: str, tag: str) -> bool:
@@ -1011,6 +1004,19 @@ def vt_branch_current(path: str, name: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def _branch_manifest(path: str, name: str, bversion: int | None = None) -> dict:
+    """The manifest of branch ``name`` at ``bversion`` (its head when
+    None) — the one resolver behind every branch read, count and
+    commit. A missing one raises ``FileNotFoundError`` naming the
+    version it resolved to, or ``head`` when the branch has none."""
+    bv = vt_branch_current(path, name) if bversion is None else bversion
+    if bv is None or not os.path.exists(_branch_manifest_file(path, name, bv)):
+        where = "head" if bv is None else f"v{bv}"
+        raise FileNotFoundError(f"no branch {name} {where} at {path}")
+    with open(_branch_manifest_file(path, name, bv)) as fh:
+        return json.load(fh)
+
+
 def _commit_to(final: str, manifest: dict) -> None:
     """The :func:`_commit` discipline against an explicit manifest
     path — shared by main-chain and branch commits; same atomic
@@ -1059,14 +1065,7 @@ def vt_read_branch(
 ) -> DataFrame:
     """Snapshot read of a branch (manifest entries resolve against the
     shared table root; position deletes apply as on main)."""
-    bv = vt_branch_current(path, name) if bversion is None else bversion
-    if bv is None or not os.path.exists(
-        _branch_manifest_file(path, name, bv)
-    ):
-        raise FileNotFoundError(f"no branch {name} v{bversion} at {path}")
-    with open(_branch_manifest_file(path, name, bv)) as fh:
-        man = json.load(fh)
-    return _snapshot(spark, path, man)
+    return _snapshot(spark, path, _branch_manifest(path, name, bversion))
 
 
 def vt_branch_append(
@@ -1078,10 +1077,7 @@ def vt_branch_append(
     counter and manifests are untouched (writer isolation), and main
     commits never appear on the branch (reader isolation)."""
     bv = vt_branch_current(path, name)
-    if bv is None:
-        raise FileNotFoundError(f"no branch {name} at {path}")
-    with open(_branch_manifest_file(path, name, bv)) as fh:
-        man = json.load(fh)
+    man = _branch_manifest(path, name, bv)
     b = df.withColumn(
         "bucket",
         F.pmod(F.col(man["bucket_key"]), F.lit(man["nbuckets"])).cast("int"),
@@ -1122,11 +1118,7 @@ def vt_merge_branch(spark: SparkSession, path: str, name: str) -> int:
     Returns the new main version. ``spark`` is unused today (no data
     is read) but kept for signature parity with the other verbs and
     for a future validating merge."""
-    bv = vt_branch_current(path, name)
-    if bv is None:
-        raise FileNotFoundError(f"no branch {name} at {path}")
-    with open(_branch_manifest_file(path, name, bv)) as fh:
-        man = json.load(fh)
+    man = _branch_manifest(path, name)
     cur = vt_current_version(path)
     if cur != man["base_version"]:
         raise ValueError(

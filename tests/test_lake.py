@@ -583,6 +583,30 @@ def test_vt_count_branch_metadata_equals_scan(spark, tmp_path):
         os.environ.pop("SPARK_GRAFT_NO_META_COUNT", None)
 
 
+def test_missing_branch_error_names_the_resolved_version(spark, tmp_path):
+    """Branch reads and counts share one manifest resolver; its
+    FileNotFoundError names the version it resolved, or ``head`` for a
+    branch with no versions, never ``vNone``."""
+    import pytest
+
+    from os_ex_3_map_reduce_spark.sources.versioned import (
+        vt_branch,
+        vt_count_branch,
+        vt_read_branch,
+        vt_write,
+    )
+
+    p = str(tmp_path / "t")
+    vt_write(spark.range(5).selectExpr("id AS k", "id AS v"), p, "k")
+    vt_branch(p, "exp")
+    with pytest.raises(FileNotFoundError, match=r"no branch nope head at "):
+        vt_read_branch(spark, p, "nope")
+    with pytest.raises(FileNotFoundError, match=r"no branch nope head at "):
+        vt_count_branch(spark, p, "nope")
+    with pytest.raises(FileNotFoundError, match=r"no branch exp v7 at "):
+        vt_count_branch(spark, p, "exp", 7)
+
+
 def test_ct_count_and_threaded_txn_parity(spark, tmp_path):
     """ct_count resolves through the catalog pin (not the table head),
     and the thread-pooled ct_txn (r15 optimization: independent

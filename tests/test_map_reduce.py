@@ -333,3 +333,184 @@ def test_sorted_group_scan_multi_emit_and_empty_finish(spark):
         ).collect()
     )
     assert got == [("a", 1), ("a", 2), ("c", 3), ("c", 4), ("c", 5)]
+
+
+class _CountFold:
+    """Counts each group's rows: ``(key[0], n)``."""
+
+    def init(self, key):
+        return 0
+
+    def step(self, state, chunk):
+        return state + len(chunk)
+
+    def finish(self, key, state):
+        return [(key[0], state)]
+
+
+@pytest.mark.parametrize(
+    "ddl,vals",
+    [("bigint", (1, None, None, None, 2)), ("string", ("a", None, None, None, "b"))],
+)
+def test_sorted_group_scan_null_key_is_one_group(spark, ddl, vals):
+    """All null keys form ONE group, as in ``groupBy``. A null bigint
+    arrives in pandas as NaN, and NaN != NaN, so a run walker that
+    compares key tuples splits it into one group per row."""
+    from os_ex_3_map_reduce_spark.operators.map_reduce import sorted_group_scan
+
+    df = spark.createDataFrame([(v,) for v in vals], f"k {ddl}")
+    scan = sorted_group_scan(df, ["k"], [], _CountFold(), f"k {ddl}, n bigint")
+    got = sorted((tuple(r) for r in scan.collect()), key=repr)
+    assert got == sorted([(vals[0], 1), (None, 3), (vals[-1], 1)], key=repr)
+
+
+class _NullKeyClient(MapReduceClient):
+    intermediate_schema = "k string, n bigint"
+    output_schema = "k string, n bigint, rows bigint"
+    n_key_cols = 2
+
+    def map(self, row):
+        return [(row.k, row.n)]
+
+    def reduce(self, key, group: pd.DataFrame):
+        return [(key[0], key[1], len(group))]
+
+
+def test_run_map_reduce_null_keys_group_like_group_by(spark):
+    """Composite keys with nulls in either column: each distinct
+    (k, n), nulls included, is exactly one reduce call."""
+    rows = [("a", 1), ("a", None), ("a", None), ("b", 2)]
+    rows += [(None, 1), (None, 1), (None, None), (None, None)]
+    df = spark.createDataFrame(rows, "k string, n bigint")
+    got = [tuple(r) for r in run_map_reduce(df, _NullKeyClient()).collect()]
+    assert len(got) == 5
+    assert set(got) == {
+        ("a", 1, 1),
+        ("a", None, 2),
+        ("b", 2, 1),
+        (None, 1, 2),
+        (None, None, 2),
+    }
+
+
+class _ReduceMustNotRun(MapReduceClient):
+    intermediate_schema = "w string, one long"
+    output_schema = "w string, cnt long"
+
+    def map(self, row):
+        return [(w, 1) for w in row.text.split(" ") if w]
+
+    def reduce(self, key, group: pd.DataFrame):
+        raise AssertionError("reduce called on empty input")
+
+
+def test_empty_input_gives_no_rows_and_no_reduce(spark):
+    empty = spark.createDataFrame([], "text string")
+    assert run_map_reduce(empty, _ReduceMustNotRun()).collect() == []
+    assert run_map_reduce(empty, _ReduceMustNotRun(), 3).collect() == []
+
+
+class _FailingReduce(MapReduceClient):
+    intermediate_schema = "w string, one long"
+    output_schema = "w string, cnt long"
+
+    def map(self, row):
+        return [(w, 1) for w in row.text.split(" ") if w]
+
+    def reduce(self, key, group: pd.DataFrame):
+        raise ValueError(f"client reduce rejected key {key[0]!r}")
+
+
+def test_reduce_exception_surfaces_as_python_exception(spark):
+    """A ``reduce`` that raises fails the query with a
+    ``PythonException`` that carries the user's own message."""
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame([("x y",)], "text string")
+    with pytest.raises(PythonException, match="client reduce rejected key"):
+        run_map_reduce(df, _FailingReduce()).collect()
+
+
+def test_map_reduce_reads_a_dataframe_result_by_column_name(spark):
+    """The batch-level API: a ``reduce_fn`` that returns a pandas
+    DataFrame is read by column name, whatever the column order."""
+    from os_ex_3_map_reduce_spark.operators.map_reduce import map_reduce
+
+    def split_words(batches):
+        for pdf in batches:
+            words = pdf["text"].str.split(" ").explode().reset_index(drop=True)
+            yield pd.DataFrame({"w": words, "one": 1})
+
+    def count(key, group: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"cnt": [int(group["one"].sum())], "w": [key[0]]})
+
+    df = spark.createDataFrame([("a b a",), ("b a",)], "text string")
+    got = map_reduce(
+        df, split_words, "w", count, "w string, one long", "w string, cnt long"
+    )
+    assert sorted(tuple(r) for r in got.collect()) == [("a", 3), ("b", 2)]
+
+
+class _ExactIntsClient(MapReduceClient):
+    intermediate_schema = "k bigint, v bigint"
+    output_schema = "k bigint, v bigint, rows bigint, key_is_int boolean"
+
+    def map(self, row):
+        return [(row.k, row.v)]
+
+    def reduce(self, key, group: pd.DataFrame):
+        v = group["v"]
+        exact = int(v.max()) if v.notna().all() else None
+        return [(key[0], exact, len(group), key[0] is None or type(key[0]) is int)]
+
+
+def test_bigints_stay_exact_beside_null_keys_and_values(spark):
+    """One partition, so one Arrow batch holds a null key, a null value
+    and bigints above 2**53. A pandas frame per batch would make those
+    columns float64 for every group in it: 2**53 and 2**53+1 would
+    merge into one key, the values would round and the keys would
+    reach reduce as floats. Each group keeps the exact values and
+    dtypes of its own rows, as ``applyInPandas`` gave them."""
+    big = 2**53
+    rows = [(big, 1), (big + 1, big + 1), (None, 5), (7, None), (7, 1)]
+    df = spark.createDataFrame(rows, "k bigint, v bigint")
+    got = run_map_reduce(df, _ExactIntsClient(), num_shuffle_partitions=1).collect()
+    assert sorted((tuple(r) for r in got), key=repr) == sorted(
+        [(big, 1, 1, True), (big + 1, big + 1, 1, True), (None, 5, 1, True), (7, None, 2, True)],
+        key=repr,
+    )
+
+
+def test_map_reduce_dataframe_results_follow_apply_in_pandas(spark):
+    """A ``reduce_fn`` DataFrame result is read as ``applyInPandas``
+    read it: an empty ``pd.DataFrame()`` emits nothing, and columns
+    without string labels are taken by position."""
+    from os_ex_3_map_reduce_spark.operators.map_reduce import map_reduce
+
+    def split_words(batches):
+        for pdf in batches:
+            words = pdf["text"].str.split(" ").explode().reset_index(drop=True)
+            yield pd.DataFrame({"w": words, "one": 1})
+
+    def count(key, group: pd.DataFrame) -> pd.DataFrame:
+        if key[0] == "a":
+            return pd.DataFrame()
+        return pd.DataFrame([[key[0], int(group["one"].sum())]])
+
+    df = spark.createDataFrame([("a b a",), ("b a",)], "text string")
+    got = map_reduce(
+        df, split_words, "w", count, "w string, one long", "w string, cnt long"
+    )
+    assert [tuple(r) for r in got.collect()] == [("b", 2)]
+
+
+def test_sorted_group_scan_keeps_null_and_nan_keys_apart(spark):
+    """A double key: null and NaN are two groups, as in ``groupBy``,
+    even where the sort puts them next to each other. (The emitted NaN
+    key reads back as null, as a NaN in any pandas result does, so the
+    groups are told apart by their row counts.)"""
+    from os_ex_3_map_reduce_spark.operators.map_reduce import sorted_group_scan
+
+    df = spark.createDataFrame([(None,), (float("nan"),)] * 2, "k double")
+    scan = sorted_group_scan(df, ["k"], [], _CountFold(), "k double, n bigint", 1)
+    assert sorted(r.n for r in scan.collect()) == [2, 2]

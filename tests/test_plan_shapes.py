@@ -853,6 +853,20 @@ def test_secondary_sort_rides_shuffle_sort(spark, qs):
     assert "Exchange rangepartitioning" not in plan, plan
 
 
+def test_mapreduce_reduce_is_one_sorted_run_scan(spark, qs):
+    """q_mapreduce_join: the client map is one ``MapInPandas``, and the
+    client reduce runs as the sorted-run scan: one key exchange feeding
+    a per-partition ``MapInArrow``, never a per-group
+    ``FlatMapGroupsInPandas``."""
+    import re
+
+    plan = explain_str(qs["q_mapreduce_join"](spark, SF))
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
 def test_hits_halfstep_is_join_plus_partial_agg(spark, qs):
     """q_hits: every half-step is one arc-join + one map-side-combined
     groupBy; no cartesian products, and the per-kind top-10 window
