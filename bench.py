@@ -28,7 +28,7 @@ time bounded. Session startup excluded; results materialized via the
 measured plan) but nothing is collected.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), BENCH_RUNS (default 2),
+SPARK_GRAFT_CPUS (default: the usable cores), BENCH_RUNS (default 2),
 BENCH_HEADLINE_RUNS (default 5).
 """
 

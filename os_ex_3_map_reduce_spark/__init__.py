@@ -13,4 +13,13 @@ DataFrame/SQL API so Catalyst + Tungsten pick the physical strategy.
 
 __version__ = "0.1.0"
 
+import os as _os
+
 from .session import get_spark, ensure_session_confs  # noqa: F401
+
+# PySpark sets SPARK_REUSE_WORKER in its worker processes only; the
+# driver's zipimport stays the stdlib's.
+if _os.environ.get("SPARK_REUSE_WORKER"):
+    from .session import install_zip_cache as _install_zip_cache
+
+    _install_zip_cache()

@@ -12,18 +12,51 @@ split and tiny ones coalesced at runtime; ``shuffle.partitions`` is a
 *default* only — AQE re-plans the actual post-shuffle parallelism from
 observed sizes, so the same code runs on local[32] and on a
 1000-executor cluster without retuning.
+
+Sizing: ``local[N]`` and the default ``shuffle.partitions`` both follow
+``engine_cpus()`` — ``$SPARK_GRAFT_CPUS`` when set, else the cores this
+process may run on.
+
+Python worker cost: every engine UDF (``mapInPandas``/``mapInArrow``)
+runs as a task in a reused PySpark worker, and PySpark's
+``setup_spark_files`` calls ``importlib.invalidate_caches()`` at the
+start of each task. On CPython 3.11 ``zipimporter.invalidate_caches``
+re-reads its archive's whole central directory, and a worker holds
+16–18 zipimporters (one per imported subpackage of ``pyspark.zip``,
+plus the spark-core jar, py4j and the engine zip): about 26,700
+entries, 0.11–0.15 s per task on a 4-core host, whatever the input
+size. ``install_zip_cache`` (called by
+the package ``__init__`` inside reused workers only) swaps in
+``_stat_checked_invalidate_caches``, which re-reads an archive only
+when its ``os.stat`` stamp changed, so later tasks skip the re-reads.
+CPython 3.12 made the same re-read lazy (gh-103200).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
+import zipimport
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def engine_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on (its CPU affinity, not the machine's total)."""
+    override = os.environ.get("SPARK_GRAFT_CPUS")
+    if override:
+        return int(override)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+DEFAULT_SHUFFLE_PARTITIONS = engine_cpus()
 
 #: Session-level (runtime-settable) confs. Applied defensively by every
 #: query entry point because the driver may hand us a SparkSession it
@@ -80,7 +113,11 @@ def _ship_package(spark: SparkSession) -> None:
     if getattr(sc, "_osx3_pkg_shipped", False):
         return
     pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(tempfile.mkdtemp(prefix="osx3_pkg_")) / "os_ex_3_map_reduce_spark.zip"
+    zip_dir = tempfile.mkdtemp(prefix="osx3_pkg_")
+    # Removed at exit, not earlier: executors fetch the zip lazily, on
+    # their first task that needs it.
+    atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+    zip_path = Path(zip_dir) / "os_ex_3_map_reduce_spark.zip"
     with zipfile.ZipFile(zip_path, "w") as zf:
         for py in sorted(pkg_dir.rglob("*.py")):
             zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
@@ -91,14 +128,50 @@ def _ship_package(spark: SparkSession) -> None:
     sc._osx3_pkg_shipped = True
 
 
+_STDLIB_INVALIDATE_CACHES = zipimport.zipimporter.invalidate_caches
+
+
+def _stat_checked_invalidate_caches(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    central directory only when the archive changed since this
+    importer's last read.
+
+    The stamp (inode, size, ``mtime_ns``) is taken before the read it
+    describes, so an archive rewritten during or after a read has a new
+    stamp and is read again on the next call. The directory read when
+    the importer was built has no stamp, so the first call reads too.
+    """
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:
+        stamp = None
+    if stamp is not None and stamp == getattr(self, "_osx3_stamp", None):
+        return
+    _STDLIB_INVALIDATE_CACHES(self)
+    self._osx3_stamp = stamp
+
+
+def install_zip_cache() -> None:
+    """Make ``importlib.invalidate_caches()`` skip unchanged zip archives
+    in this process (see the module docstring). The package ``__init__``
+    calls it only inside a reused PySpark worker."""
+    zipimport.zipimporter.invalidate_caches = _stat_checked_invalidate_caches
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-created session.
 
     Idempotent and safe to call per-query: all keys in RUNTIME_CONFS are
     session confs (not static SparkConf), so they take effect on a live
-    session. Never raises — a locked-down conf is skipped.
+    session. Never raises — a locked-down conf is skipped. A session
+    built by ``get_spark`` keeps the ``shuffle_partitions`` it asked for.
     """
-    for key, value in RUNTIME_CONFS.items():
+    partitions = getattr(
+        spark.sparkContext, "_osx3_shuffle_partitions", DEFAULT_SHUFFLE_PARTITIONS
+    )
+    confs = {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(partitions)}
+    for key, value in confs.items():
         try:
             spark.conf.set(key, value)
         except Exception:
@@ -133,9 +206,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32). On a real
-    cluster, pass None and submit through spark-submit — every operator
-    here is partitioning-agnostic.
+    ``master`` defaults to ``local[engine_cpus()]`` and
+    ``shuffle_partitions`` to ``engine_cpus()``: ``$SPARK_GRAFT_CPUS``
+    when set, else the host's usable cores. On a real cluster, pass
+    None and submit through spark-submit — every operator here is
+    partitioning-agnostic. ``shuffle_partitions`` is a session conf, so
+    a reused live session takes it too.
 
     The driver heap is sized to the host (``driver_memory``): half its
     physical memory, capped at 24g, so 8g on a 16 GiB machine and 24g
@@ -144,7 +220,7 @@ def get_spark(
     call starts the JVM; a live session is reused as it is.
     """
     if master is None:
-        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        master = f"local[{engine_cpus()}]"
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
@@ -152,7 +228,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_memory())
         # Static conf (must be set before the JVM session exists, so it
         # lives here and not in RUNTIME_CONFS): cap plan-string
@@ -172,6 +247,8 @@ def get_spark(
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
+    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark.sparkContext._osx3_shuffle_partitions = shuffle_partitions
     return ensure_session_confs(spark)

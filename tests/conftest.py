@@ -13,7 +13,7 @@ import os
 import duckdb
 import pytest
 
-from os_ex_3_map_reduce_spark.session import get_spark
+from os_ex_3_map_reduce_spark.session import engine_cpus, get_spark
 from os_ex_3_map_reduce_spark.sources.tables import TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -22,7 +22,8 @@ SF_CORRECT = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    n = min(8, engine_cpus())
+    s = get_spark(app_name="tests", master=f"local[{n}]", shuffle_partitions=n)
     yield s
 
 

@@ -3423,7 +3423,10 @@ def test_postings_segment_meta_contract_and_observed_stats(spark, tmp_path):
 def test_bpe_train_releases_all_cached_generations(spark):
     """r15 optimization pin: bpe_train now defers each generation's
     unpersist by one round (the argmax is the materializing action) —
-    the loop must still release every cached block it created."""
+    the loop must still release every cached block it created.
+
+    Only RDDs persisted during the calls are checked: ContextCleaner
+    may release earlier tests' cached RDDs while this test runs."""
     from os_ex_3_map_reduce_spark.operators.bpe import bpe_train
 
     def cached_ids() -> set:
@@ -3436,7 +3439,7 @@ def test_bpe_train_releases_all_cached_generations(spark):
     # early-stop path holds fewer generations but must release too
     tiny = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
     bpe_train(tiny, num_merges=5).collect()
-    assert cached_ids() == before
+    assert cached_ids() - before == set()
 
 
 def test_postings_segment_append_equals_rebuild(spark, tmp_path):
